@@ -863,8 +863,8 @@ private[sources] final class GraftStagedTable(ident: Identifier, dir: String,
 
   private def spark = SparkSession.active
 
-  /** (relDir, entries) staged by the write; empty until insert runs. */
-  @volatile private var staged: Option[(String, Seq[Snapshot.FileEntry])] = None
+  /** Entries staged by the write; empty until insert runs. */
+  @volatile private var staged: Seq[Snapshot.FileEntry] = Nil
 
   override def name(): String = s"graft-staged `$dir`"
   override def schema(): StructType = tableSchema
@@ -887,24 +887,24 @@ private[sources] final class GraftStagedTable(ident: Identifier, dir: String,
               // align to the declared schema positionally (CTAS output
               // names follow the SELECT; the table's names rule)
               val aligned = data.toDF(tableSchema.fieldNames.toIndexedSeq: _*)
-              staged = Some(Snapshot.stageDataFiles(data.sparkSession, dir,
-                aligned, spec))
+              // staged bytes are invisible: nothing references them
+              // until the publish wins
+              staged = DataFiles.write(data.sparkSession, dir, aligned, spec = spec)
             }
           }
       }
     }
 
   override def commitStagedChanges(): Unit = {
-    val entries = staged.map(_._2).getOrElse(Seq.empty)
     val nullable = StructType(tableSchema.fields.map(_.copy(nullable = true)))
-    try Snapshot.publishStaged(spark, dir, nullable.toDDL, entries, spec, replace)
+    try Snapshot.publishStaged(spark, dir, nullable.toDDL, staged, spec, replace)
     catch { case e: Throwable => abortStagedChanges(); throw e }
   }
 
   override def abortStagedChanges(): Unit = {
     val s = spark
     // always drop OUR staged bytes
-    staged.foreach { case (rel, _) => Snapshot.discardStaged(s, dir, rel) }
+    Snapshot.discardStaged(s, dir, staged)
     // a CREATE aborts to NO table — but only when no committed table
     // sits at the path AND nothing else lives there: if a RACING CTAS
     // won version 1 while we staged, deleting the directory would

@@ -1,17 +1,10 @@
 package graft.sources
 
-import java.util.UUID
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
-import org.apache.spark.sql.graft.ParquetWriteBridge
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 /** DSv2 GROUP-BASED row-level operations over [[Snapshot]] tables —
   * the plumbing that lights up SQL `UPDATE`, `MERGE INTO`, and
@@ -46,10 +39,9 @@ import org.apache.spark.util.SerializableConfiguration
   * single-winner guard, so a concurrent commit fails this statement
   * loudly instead of being silently overwritten. The scan is dv-aware
   * (deleted rows cannot resurrect through a rewrite) and reads
-  * through the engine's own vectorized parquet path; the write runs
-  * through the engine's own parquet writer stack
-  * ([[ParquetWriteBridge]]), so codec/stats/dictionary conf all
-  * apply.
+  * through the engine's own vectorized parquet path; the write is the
+  * one snapshot data-file writer ([[DataFiles]]), which collects each
+  * file's stats, blooms and CHECK counts while writing it.
   *
   * FILE GRANULARITY comes from Spark's runtime GROUP FILTERING: the
   * operation declares `_file` as its required metadata attribute, so
@@ -201,10 +193,12 @@ private object RowLevelScanFilter {
 }
 
 /** The replacement write: per-task parquet files into a fresh
-  * `data/<uuid>` commit dir, then ONE manifest publish that swaps the
-  * scanned files for the written ones. Task attempts that never
-  * commit are filtered out by name at commit (and their bytes
-  * removed), so speculative or retried tasks cannot leak rows.
+  * `data/<uuid>` commit dir through [[DataFiles]] (so the rewritten
+  * files carry the table's stats/bloom spec and pass its CHECK
+  * constraints), then ONE manifest publish that swaps the scanned
+  * files for the written ones. Task attempts that never commit are
+  * pruned by [[DataFiles.finish]], so speculative or retried tasks
+  * cannot leak rows.
   */
 private final class RowLevelReplaceWrite(op: GraftRowLevelOperation,
     dir: String, writeSchema: StructType) extends Write {
@@ -212,7 +206,7 @@ private final class RowLevelReplaceWrite(op: GraftRowLevelOperation,
   override def description(): String = s"graft replace-write for ${op.description()}"
 
   override def toBatch: BatchWrite = new BatchWrite {
-    private val commitRel = s"${Snapshot.DataDir}/${UUID.randomUUID()}"
+    @volatile private var writer: DataFiles.Writer = _
     private def spark = SparkSession.active
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
@@ -221,38 +215,15 @@ private final class RowLevelReplaceWrite(op: GraftRowLevelOperation,
       require(writeSchema.fieldNames.toSeq == base.schema.fieldNames.toSeq,
         s"row-level write schema ${writeSchema.fieldNames.mkString(",")} must match " +
           s"the table schema ${base.schema.fieldNames.mkString(",")}")
-      // files carry PHYSICAL column names (column-mapping state); the
-      // incoming rows are positional so a field rename is free
-      val phys = Snapshot.physicalSchema(writeSchema, base.mapping)
-      val (factory, conf) = ParquetWriteBridge.writerSetup(spark, phys)
-      RowLevelWriterFactory(s"$dir/$commitRel", phys, factory, conf)
+      // incoming rows are positional, labelled with the LOGICAL names
+      writer = DataFiles.writer(spark, dir, writeSchema, base.mapping, base.spec,
+        base.constraints)
+      writer
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val s = spark
       val base = op.base
-      val committed: Set[String] = messages.flatMap {
-        case RowLevelFileCommit(names) => names
-        case _ => Seq.empty
-      }.toSet
-      val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-      val commitPath = new Path(s"$dir/$commitRel")
-      // drop files of never-committed attempts (speculation/retries)
-      if (fs.exists(commitPath))
-        fs.listStatus(commitPath).foreach { st =>
-          if (st.isFile && !committed.contains(st.getPath.getName))
-            fs.delete(st.getPath, false)
-        }
-      val entries =
-        if (committed.isEmpty) Seq.empty
-        else Snapshot.collectEntries(s, s"$dir/$commitRel", commitRel,
-          Snapshot.physicalSchema(base.schema, base.mapping))
-          .filter(e => committed.contains(Snapshot.baseName(e.path)))
-      if (entries.isEmpty && fs.exists(commitPath)) fs.delete(commitPath, true)
-      if (entries.nonEmpty)
-        Snapshot.validateWritten(s, dir, commitRel,
-          Snapshot.physicalSchema(base.schema, base.mapping),
-          base.schema.fieldNames.toSeq, base.constraints)
+      val entries = DataFiles.finish(spark, writer, messages.toSeq)
       val opName = op.command() match {
         case RowLevelOperation.Command.UPDATE => "update"
         case RowLevelOperation.Command.DELETE => "delete"
@@ -267,56 +238,14 @@ private final class RowLevelReplaceWrite(op: GraftRowLevelOperation,
       // into the new version by manifest reference, statistics and
       // deletion vectors included
       val untouched = base.files.filterNot(e => op.replacedPaths.contains(e.path))
-      Snapshot.publishRowLevel(s, dir, base, untouched ++ entries, opName,
+      Snapshot.publishRowLevel(spark, dir, base, untouched ++ entries, opName,
         metrics = Map(
           "files_rewritten" -> op.replacedPaths.size.toLong,
           "files_added" -> entries.size.toLong,
           "rows_written" -> entries.map(_.rows).sum))
     }
 
-    override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val s = spark
-      val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(s"$dir/$commitRel"), true)
-    }
+    override def abort(messages: Array[WriterCommitMessage]): Unit =
+      if (writer != null) DataFiles.abort(spark, writer)
   }
-}
-
-private final case class RowLevelFileCommit(names: Seq[String])
-    extends WriterCommitMessage
-
-private final case class RowLevelWriterFactory(outDir: String, schema: StructType,
-    factory: OutputWriterFactory, conf: SerializableConfiguration)
-    extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val ctx = ParquetWriteBridge.taskContext(conf, partitionId, taskId)
-      private val name =
-        s"part-$partitionId-$taskId-${UUID.randomUUID()}${factory.getFileExtension(ctx)}"
-      // lazy: a task that receives no rows writes no file at all
-      private var writer: org.apache.spark.sql.execution.datasources.OutputWriter = _
-
-      override def write(row: InternalRow): Unit = {
-        if (writer == null)
-          writer = factory.newInstance(s"$outDir/$name", schema, ctx)
-        writer.write(row)
-      }
-
-      // projection-aware task form: the metadata row (`_file`) is not
-      // persisted — groups are replaced wholesale, identity is implicit
-      override def write(metadata: InternalRow, row: InternalRow): Unit =
-        write(row)
-
-      override def commit(): WriterCommitMessage = {
-        if (writer == null) RowLevelFileCommit(Seq.empty)
-        else { writer.close(); writer = null; RowLevelFileCommit(Seq(name)) }
-      }
-
-      override def abort(): Unit = close()
-
-      override def close(): Unit = {
-        if (writer != null) { writer.close(); writer = null }
-      }
-    }
 }

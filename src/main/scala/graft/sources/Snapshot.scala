@@ -56,13 +56,15 @@ import org.json4s.jackson.JsonMethods
   *
   * ==Data skipping==
   *
-  * [[writeDataFiles]] records min/max/null-count for the first
-  * [[MaxStatsCols]] supported-type columns of every file it writes
-  * (one distributed aggregation over the just-written files — O(commit
-  * size), never O(table)). [[readVersion]] serves the table through a
-  * manifest-backed [[FileIndex]], so Catalyst hands every pushed data
-  * filter to [[SnapshotFileIndex.listFiles]] and files whose stats
-  * PROVE they cannot match are never opened, listed, or scheduled —
+  * Every data file is written by one writer ([[DataFiles]]) that
+  * collects, as the rows pass, min/max/null-count for the first
+  * [[MaxStatsCols]] supported-type columns (or the spec's statsCols)
+  * and any configured blooms; the writing task returns them with its
+  * file, so no written byte is read back. [[readVersion]] serves the
+  * table through a manifest-backed [[FileIndex]], so Catalyst hands
+  * every pushed data filter to [[SnapshotFileIndex.listFiles]] and
+  * files whose stats PROVE they cannot match are never opened,
+  * listed, or scheduled —
   * the scan's file list shrinks at PLANNING time from metadata alone.
   * On a key-clustered layout (Z-order / range partitioning, see
   * operators.Layout) a selective predicate reads a handful of files
@@ -576,191 +578,10 @@ object Snapshot {
       scalarFields(m) :+ ("files" -> JArray(m.files.toList.map(entryJson)))))
     catch { case _: java.util.ConcurrentModificationException => () }
 
-  // ---------------------------------------------------------------
-  // statistics encoding
-  // ---------------------------------------------------------------
-
-  private def statsSupported(f: StructField): Boolean = f.dataType match {
-    case _: NumericType | StringType | DateType | TimestampType | BooleanType => true
-    case _ => false
-  }
-
-  /** Columns eligible for per-file stats. Default (no configured
-    * statsCols): first [[MaxStatsCols]] supported-type fields in
-    * schema order — the Delta convention, bounded metadata however
-    * wide the table. A configured `spec.statsCols` replaces the
-    * default (a wide table spends its stats budget on the filter
-    * columns); identity `spec.partitionCols` are ALWAYS included, so
-    * partition predicates prune no matter where the column sits in
-    * the schema. `spec` speaks PHYSICAL column names here (the
-    * caller translates — manifest stats are physical-keyed).
-    */
-  private def statsFields(schema: StructType, spec: TableSpec): Seq[StructField] = {
-    val base =
-      if (spec.statsCols.isEmpty) schema.fields.toSeq.take(MaxStatsCols)
-      else schema.fields.toSeq.filter(f => spec.statsCols.contains(f.name))
-    val withParts = base ++ schema.fields.toSeq.filter(f =>
-      spec.partitionCols.contains(f.name) && !base.exists(_.name == f.name))
-    withParts.filter(statsSupported)
-  }
-
-  /** Translate a logical-name spec to the physical names the data
-    * files (and therefore per-file stats/blooms) carry.
-    */
-  private def physSpec(spec: TableSpec, mapping: Map[String, String]): TableSpec =
-    if (mapping.isEmpty) spec
-    else spec.copy(
-      partitionCols = spec.partitionCols.map(c => mapping.getOrElse(c, c)),
-      statsCols = spec.statsCols.map(c => mapping.getOrElse(c, c)),
-      bloomCols = spec.bloomCols.map(c => mapping.getOrElse(c, c)))
-
-  /** min/max aggregation input for a stats column: temporal types are
-    * pre-encoded to their integer domain (days / micros) so the
-    * collected external value is a plain number.
-    */
-  private def statExpr(f: StructField) = f.dataType match {
-    case DateType => unix_date(col(f.name))
-    case TimestampType => unix_micros(col(f.name))
-    case _ => col(f.name)
-  }
-
-  /** Canonical string encoding of a collected min/max value; None
-    * drops the stat (unknown). Strings longer than MaxStatsStringLen
-    * are dropped — truncation would make max an unsound bound.
-    */
-  private def encodeStat(dt: DataType, v: Any): Option[String] = v match {
-    case null => None
-    case s: String => if (s.length <= MaxStatsStringLen) Some(s) else None
-    case d: java.lang.Double => if (d.isNaN) None else Some(d.toString)
-    case fl: java.lang.Float => if (fl.isNaN) None else Some(fl.toString)
-    case b: java.math.BigDecimal => Some(b.toPlainString)
-    case b: scala.math.BigDecimal => Some(b.bigDecimal.toPlainString)
-    case other => Some(other.toString) // integral types, booleans, pre-encoded temporals
-  }
-
-  /** Collect per-file entries (path, bytes, rows, column stats, and —
-    * when the spec asks — per-column bloom filters) for the files just
-    * written under `absDir` — ONE distributed aggregation grouped by
-    * `_metadata.file_path`, O(this commit's data), collected as O(this
-    * commit's files) rows on the driver. `spec` speaks PHYSICAL names.
-    */
-  private[sources] def collectEntries(spark: SparkSession, absDir: String, relDir: String,
-      schema: StructType, spec: TableSpec = TableSpec()): Seq[FileEntry] = {
-    // the listing defines the file set (an all-null-partition part
-    // file has rows the stats agg can't see per column; a ZERO-row
-    // part file produces no agg group at all but still belongs to the
-    // snapshot); the stats agg decorates it
-    val f = fs(spark, new Path(absDir).toString)
-    val listed =
-      if (!f.exists(new Path(absDir))) Seq.empty
-      else f.listStatus(new Path(absDir)).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-        .map(s => s.getPath.getName -> s.getLen).sortBy(_._1)
-    if (listed.isEmpty) return Seq.empty
-    val df = spark.read.schema(schema).parquet(absDir)
-    val sf = statsFields(schema, spec)
-    // bloom keys are xxhash64(value) — type-agnostic, and the probe
-    // side (SnapshotFileIndex) hashes its literal the same way
-    val bloomFlds = schema.fields.toSeq.filter(fl => spec.bloomCols.contains(fl.name))
-    val aggs = (count(lit(1)).as("__rows") +:
-      sf.flatMap(fld => Seq(
-        min(statExpr(fld)).as(s"__min_${fld.name}"),
-        max(statExpr(fld)).as(s"__max_${fld.name}"),
-        sum(when(col(fld.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${fld.name}")))) ++
-      bloomFlds.map(fld => graft.functions.vector.bloomAgg(
-        xxhash64(col(fld.name)), spec.bloomBits, BloomHashes).as(s"__bloom_${fld.name}"))
-    val byName: Map[String, FileEntry] = df
-      .groupBy(col("_metadata.file_path").as("__fp"),
-        col("_metadata.file_size").as("__bytes"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.map { r =>
-        val abs = r.getAs[String]("__fp")
-        val name = abs.substring(abs.lastIndexOf('/') + 1)
-        val stats = sf.map { fld =>
-          fld.name -> ColStats(
-            encodeStat(fld.dataType, r.getAs[Any](s"__min_${fld.name}")),
-            encodeStat(fld.dataType, r.getAs[Any](s"__max_${fld.name}")),
-            r.getAs[Long](s"__nulls_${fld.name}"))
-        }.toMap
-        val blooms = bloomFlds.flatMap { fld =>
-          Option(r.getAs[Array[Byte]](s"__bloom_${fld.name}")).map(b =>
-            fld.name -> java.util.Base64.getEncoder.encodeToString(b))
-        }.toMap
-        name -> FileEntry(s"$relDir/$name", r.getAs[Long]("__bytes"),
-          r.getAs[Long]("__rows"), stats, None, blooms)
-      }.toMap
-    listed.map { case (name, bytes) =>
-      byName.getOrElse(name, FileEntry(s"$relDir/$name", bytes, 0L,
-        sf.map(fld => fld.name -> ColStats(None, None, 0L)).toMap))
-    }
-  }
-
-  /** Write `df`'s rows as a fresh immutable file set under data/ and
-    * return the per-file entries (paths table-root-relative) with
-    * collected statistics. When the table carries CHECK `constraints`,
-    * the written rows are validated (one aggregation over the just-
-    * written, page-cache-warm commit — O(commit), never O(table)) and
-    * a violation aborts BEFORE any manifest publish: the data dir is
-    * removed, no version is minted, readers never see the bad rows.
-    * SQL CHECK semantics: only a FALSE predicate violates; NULL passes.
-    */
-  /** `cluster = false` (compact/optimize): the caller owns the layout
-    * — its repartition/range/z-order choice must not be re-shuffled by
-    * the partition clustering below.
-    */
-  private def writeDataFiles(spark: SparkSession, dir: String, df: DataFrame,
-      constraints: Map[String, String] = Map.empty,
-      mapping: Map[String, String] = Map.empty,
-      spec: TableSpec = TableSpec(),
-      cluster: Boolean = true): Seq[FileEntry] = {
-    val commitId = java.util.UUID.randomUUID().toString
-    val rel = s"$DataDir/$commitId"
-    // identity partitioning: CLUSTER the batch by the partition columns
-    // (one hash shuffle over this commit's rows, never the table) so
-    // each written file holds few partition values and the always-
-    // collected partition-column stats make partition predicates prune
-    // at planning time — file-level value clustering instead of a
-    // directory-per-value layout
-    val present = spec.partitionCols.filter(df.columns.contains)
-    val clustered =
-      if (!cluster || present.isEmpty || present.size != spec.partitionCols.size) df
-      // explicit count: AQE coalesces a bare repartition(cols) down to
-      // one partition on small batches, which would defeat the
-      // value-per-file layout the partition stats depend on
-      else df.repartition(spark.sessionState.conf.numShufflePartitions,
-        present.map(col): _*)
-    // files always carry PHYSICAL names; `df` arrives logical
-    val dfPhys = toPhysical(clustered, mapping)
-    dfPhys.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
-    val entries = collectEntries(spark, s"$dir/$rel", rel, dfPhys.schema,
-      physSpec(spec, mapping))
-    if (entries.nonEmpty)
-      validateWritten(spark, dir, rel, dfPhys.schema,
-        df.schema.fieldNames.toSeq, constraints)
-    entries
-  }
-
-  /** Stage `df` as immutable data files under `dir`'s data/ WITHOUT
-    * any manifest publish — the write half of atomic CTAS/RTAS
-    * ([[GraftCatalog]] staging): the staged catalog later publishes
-    * them ([[publishStaged]]) or discards them ([[discardStaged]]).
-    * Returns (relative commit dir, entries). A reader can never see
-    * staged bytes: nothing references them until the publish wins.
-    */
-  private[sources] def stageDataFiles(spark: SparkSession, dir: String,
-      df: DataFrame, spec: TableSpec): (String, Seq[FileEntry]) = {
-    val rel = s"$DataDir/${java.util.UUID.randomUUID()}"
-    val present = spec.partitionCols.filter(df.columns.contains)
-    val clustered =
-      if (present.isEmpty || present.size != spec.partitionCols.size) df
-      else df.repartition(spark.sessionState.conf.numShufflePartitions,
-        present.map(col): _*)
-    clustered.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
-    (rel, collectEntries(spark, s"$dir/$rel", rel, clustered.schema, spec))
-  }
-
-  /** Publish staged entries as the table's first version (CTAS) or as
-    * a full-replace version (RTAS). CREATE atomicity rides the same
+  /** Publish entries staged by [[DataFiles.write]] (the write half of
+    * atomic CTAS/RTAS, see [[GraftCatalog]]) as the table's first
+    * version (CTAS) or as a full-replace version (RTAS). CREATE
+    * atomicity rides the same
     * single-winner v1 publish as every commit: two racing CTAS of the
     * same table produce one table. RTAS resets constraints and column
     * mapping — REPLACE TABLE re-DEFINES the table, unlike
@@ -779,37 +600,13 @@ object Snapshot {
       specOverride = Some(spec))
   }
 
-  /** Remove a staged-but-never-published commit dir (CTAS abort). */
-  private[sources] def discardStaged(spark: SparkSession, dir: String,
-      rel: String): Unit =
-    fs(spark, dir).delete(new Path(s"$dir/$rel"), true)
-
-  /** Constraint gate shared by [[writeDataFiles]] and the DSv2
-    * row-level write path: ONE aggregation over the freshly written
-    * physical files at `dir/rel` (read back under their LOGICAL
-    * labels, positional), abort — delete the written data and throw,
-    * no manifest published — on any violating row. No-op when the
-    * table has no constraints.
+  /** Remove the commit dir of staged-but-never-published files (CTAS
+    * abort).
     */
-  private[sources] def validateWritten(spark: SparkSession, dir: String, rel: String,
-      physSchema: StructType, logicalNames: Seq[String],
-      constraints: Map[String, String]): Unit = {
-    if (constraints.isEmpty) return
-    val written = spark.read.schema(physSchema).parquet(s"$dir/$rel")
-      .toDF(logicalNames.toIndexedSeq: _*)
-    val names = constraints.keys.toSeq.sorted
-    val aggs = names.map(n => sum(when(
-      not(coalesce(expr(constraints(n)), lit(true))), 1L).otherwise(0L)).as(n))
-    val r = written.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val bad = names.map(n => n -> r.getAs[Long](n)).filter(_._2 > 0)
-    if (bad.nonEmpty) {
-      fs(spark, dir).delete(new Path(s"$dir/$rel"), true)
-      throw new IllegalArgumentException(
-        s"CHECK constraint violated at $dir: " +
-          bad.map { case (n, c) => s"'$n' (${constraints(n)}) by $c row(s)" }.mkString("; ") +
-          " — commit aborted, no version published")
-    }
-  }
+  private[sources] def discardStaged(spark: SparkSession, dir: String,
+      files: Seq[FileEntry]): Unit =
+    files.map(e => e.path.take(e.path.lastIndexOf('/'))).distinct
+      .foreach(rel => fs(spark, dir).delete(new Path(s"$dir/$rel"), true))
 
   /** Publish a DSv2 row-level (SQL UPDATE / DELETE / MERGE) replace
     * commit: `files` is the COMPLETE new listing (carried + written),
@@ -1076,14 +873,6 @@ object Snapshot {
   private def mapsAny(schema: StructType, mapping: Map[String, String]): Boolean =
     mapping.nonEmpty && schema.fields.exists(f => mapping.contains(f.name))
 
-  /** Rename a logical frame's columns to their physical names for
-    * writing. Positional (`toDF`), so it cannot collide mid-rename the
-    * way a chain of `withColumnRenamed` can (rename a→b while b→a).
-    */
-  private def toPhysical(df: DataFrame, mapping: Map[String, String]): DataFrame =
-    if (mapping.isEmpty) df
-    else df.toDF(df.schema.fields.map(f => mapping.getOrElse(f.name, f.name)).toIndexedSeq: _*)
-
   /** Assign physical names for columns being ADDED to the table
     * (explicit [[addColumn]] or append/upsert schema evolution). A new
     * logical name binds itself as physical unless that physical slot
@@ -1146,7 +935,7 @@ object Snapshot {
       spec: Option[TableSpec] = None): (Long, Long) = {
     val base = baseManifest(spark, dir)
     val effSpec = spec.orElse(base.map(_.spec)).getOrElse(TableSpec())
-    val files = writeDataFiles(spark, dir, df,
+    val files = DataFiles.write(spark, dir, df,
       base.map(_.constraints).getOrElse(Map.empty), spec = effSpec)
     // a full replace references none of the old files, so the column
     // mapping resets to identity — retained versions keep THEIR OWN
@@ -1207,7 +996,7 @@ object Snapshot {
         val added = schema.fields.filterNot(f => b.schema.fieldNames.contains(f.name))
         b.mapping ++ assignPhysical(b, added.toSeq).filter { case (l, p) => l != p }
     }
-    val files = writeDataFiles(spark, dir, df,
+    val files = DataFiles.write(spark, dir, df,
       base.map(_.constraints).getOrElse(Map.empty), mapping,
       base.map(_.spec).getOrElse(TableSpec()))
     val v = commitManifest(spark, dir, "append", schema.toDDL,
@@ -1499,13 +1288,10 @@ object Snapshot {
     val physKeyCol = prev.mapping.getOrElse(keyCol, keyCol)
     val changeKeyType = changeKeys.schema(keyCol).dataType
     val changeRange: Option[(String, String)] = {
-      val r = changeKeys.agg(
-        min(statExpr(StructField(keyCol, changeKeyType))).as("__mn"),
-        max(statExpr(StructField(keyCol, changeKeyType))).as("__mx")).collect()(0)
-      for {
-        mn <- encodeStat(changeKeyType, r.get(0))
-        mx <- encodeStat(changeKeyType, r.get(1))
-      } yield (mn, mx)
+      val r = changeKeys.agg(min(col(keyCol)), max(col(keyCol))).collect()(0)
+      def enc(i: Int) = DataFiles.encodeStat(
+        org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(r.get(i)))
+      for (mn <- enc(0); mx <- enc(1)) yield (mn, mx)
     }
     def mayContainChangedKey(e: FileEntry): Boolean = (e.stats.get(physKeyCol), changeRange) match {
       case (Some(cs), Some((cmn, cmx))) =>
@@ -1579,7 +1365,7 @@ object Snapshot {
     val base = addedCols.foldLeft(base0)((d, f) =>
       d.withColumn(f.name, lit(null).cast(f.dataType)))
     val merged = graft.operators.Merge.upsert(base, changes, keys, deleteCol)
-    val newFiles = writeDataFiles(spark, dir, merged, prev.constraints, newMapping,
+    val newFiles = DataFiles.write(spark, dir, merged, prev.constraints, newMapping,
       prev.spec)
     commitManifest(spark, dir, "upsert", nullable(newSchema).toDDL,
       untouched ++ newFiles, batchId, txnApp, Some(prev),
@@ -1634,7 +1420,7 @@ object Snapshot {
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema)
       else readEntries(spark, dir, touched, curSchema, prev.tsMs, prev.mapping)
     val merged = Merge.merge(base, source, keys, clauses)
-    val newFiles = writeDataFiles(spark, dir, merged, prev.constraints, prev.mapping,
+    val newFiles = DataFiles.write(spark, dir, merged, prev.constraints, prev.mapping,
       prev.spec)
     commitManifest(spark, dir, "merge", prev.schemaDdl,
       untouched ++ newFiles, batchId, txnApp, Some(prev),
@@ -1843,7 +1629,7 @@ object Snapshot {
         case None => col(f.name)
       }
     }: _*)
-    val newFiles = writeDataFiles(spark, dir, updated, prev.constraints, prev.mapping,
+    val newFiles = DataFiles.write(spark, dir, updated, prev.constraints, prev.mapping,
       prev.spec)
     Some(commitManifest(spark, dir, "update", prev.schemaDdl,
       untouched ++ newFiles, batchId, txnApp, Some(prev),
@@ -1912,7 +1698,7 @@ object Snapshot {
           case None => col(fl.name)
         }
       }: _*)
-      val newFiles = writeDataFiles(spark, dir, updated, prev.constraints,
+      val newFiles = DataFiles.write(spark, dir, updated, prev.constraints,
         prev.mapping, prev.spec)
 
       // (b) tombstones: per-file fates — full-match files DROP (their
@@ -2014,11 +1800,11 @@ object Snapshot {
       e.rows >= 0 && counts(baseName(e.path)) >= liveRows(e))
     val kept =
       if (partial.isEmpty) Seq.empty[FileEntry]
-      else writeDataFiles(spark, dir,
+      else DataFiles.write(spark, dir,
         readEntries(spark, dir, partial, schema, prev.tsMs, prev.mapping)
           .filter(!coalesce(condition, lit(false))),
         prev.constraints, prev.mapping, prev.spec)
-    val newFiles = writeDataFiles(spark, dir, aligned, prev.constraints, prev.mapping,
+    val newFiles = DataFiles.write(spark, dir, aligned, prev.constraints, prev.mapping,
       prev.spec)
     Some(commitManifest(spark, dir, "replace_where", prev.schemaDdl,
       carried ++ kept ++ newFiles, batchId, txnApp, Some(prev),
@@ -2041,7 +1827,7 @@ object Snapshot {
     val bytes = prev.files.map(_.bytes).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val df = readVersion(spark, dir, prev.version).repartition(n)
-    val files = writeDataFiles(spark, dir, df, mapping = prev.mapping,
+    val files = DataFiles.write(spark, dir, df, mapping = prev.mapping,
       spec = prev.spec, cluster = false)
     commitManifest(spark, dir, "compact", prev.schemaDdl, files, None, None, Some(prev),
       metrics = Map("files_rewritten" -> prev.files.size.toLong,
@@ -2357,7 +2143,7 @@ object Snapshot {
         else df0.repartitionByRange(n, clusterBy.map(col): _*)
           .sortWithinPartitions(clusterBy.map(col): _*)
     }
-    val files = writeDataFiles(spark, dir, df, mapping = prev.mapping,
+    val files = DataFiles.write(spark, dir, df, mapping = prev.mapping,
       spec = prev.spec, cluster = false)
     Some(commitManifest(spark, dir, "optimize", prev.schemaDdl,
       kept ++ files, None, None, Some(prev),
@@ -2954,7 +2740,7 @@ object Snapshot {
     }
     // Orphan sweep: data files referenced by NO manifest at all — the
     // residue of a commit that lost the optimistic race after writing
-    // its files (writeDataFiles succeeded, manifest rename didn't).
+    // its files (DataFiles.write succeeded, manifest rename didn't).
     // Only files older than the grace window are swept, so an
     // IN-FLIGHT commit (files written, manifest about to publish)
     // is never collected — the same mtime-retention rule table

@@ -778,23 +778,6 @@ private final class SnapshotReaderFactory(
   }
 }
 
-/** Task-side factory for the streaming SINK (`writeStream.toTable`):
-  * each epoch's tasks write native parquet into an epoch-scoped commit
-  * dir through the same [[RowLevelWriterFactory]] path row-level
-  * rewrites use. A case class of serializable pieces only — shipped to
-  * executors.
-  */
-private final case class SnapshotStreamingWriterFactory(dirAbs: String,
-    runId: String, schema: StructType,
-    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: org.apache.spark.util.SerializableConfiguration)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    RowLevelWriterFactory(s"$dirAbs/${Snapshot.DataDir}/$runId-e$epochId",
-      schema, factory, conf).createWriter(partitionId, taskId)
-}
-
 /** The identifier-based streaming SINK: `df.writeStream.toTable(
   * "graft.db.t")` — every epoch publishes ONE append version carrying
   * `batchId = epochId` under the WRITER-SCOPED txn cursor
@@ -811,9 +794,8 @@ private final class SnapshotStreamingWrite(dir: String,
     writeSchema: StructType, queryId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
-  private val runId = java.util.UUID.randomUUID().toString
+  @volatile private var writer: DataFiles.Writer = _
   private def spark = SparkSession.active
-  private def relOf(epochId: Long): String = s"${Snapshot.DataDir}/$runId-e$epochId"
 
   override def createStreamingWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
@@ -826,51 +808,20 @@ private final class SnapshotStreamingWrite(dir: String,
     require(writeSchema.fieldNames.toSeq == m.schema.fieldNames.toSeq,
       s"streaming write schema ${writeSchema.fieldNames.mkString(",")} must match " +
         s"the table schema ${m.schema.fieldNames.mkString(",")}")
-    val phys = Snapshot.physicalSchema(writeSchema, m.mapping)
-    val (factory, conf) =
-      org.apache.spark.sql.graft.ParquetWriteBridge.writerSetup(s, phys)
-    SnapshotStreamingWriterFactory(dir, runId, phys, factory, conf)
+    writer = DataFiles.writer(s, dir, writeSchema, m.mapping, m.spec, m.constraints)
+    writer
   }
 
   override def commit(epochId: Long,
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    val s = spark
-    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val rel = relOf(epochId)
-    val p = new Path(s"$dir/$rel")
-    val committed: Set[String] = messages.flatMap {
-      case RowLevelFileCommit(names) => names
-      case _ => Seq.empty
-    }.toSet
-    // drop files of never-committed attempts (speculation/retries)
-    if (fs.exists(p))
-      fs.listStatus(p).foreach { st =>
-        if (st.isFile && !committed.contains(st.getPath.getName))
-          fs.delete(st.getPath, false)
-      }
-    val m = Snapshot.readManifest(s, dir, Snapshot.latestVersion(s, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir")))
-    val phys = Snapshot.physicalSchema(m.schema, m.mapping)
-    val entries =
-      if (committed.isEmpty) Seq.empty
-      else Snapshot.collectEntries(s, s"$dir/$rel", rel, phys, m.spec)
-        .filter(e => committed.contains(Snapshot.baseName(e.path)))
-    if (entries.isEmpty) { // empty epoch: no version, no debris
-      if (fs.exists(p)) fs.delete(p, true)
-      return
-    }
-    Snapshot.validateWritten(s, dir, rel, phys,
-      m.schema.fieldNames.toSeq, m.constraints)
-    Snapshot.appendEntries(s, dir, entries, epochId, queryId) match {
-      case None => fs.delete(p, true) // replayed epoch: bytes redundant
-      case Some(_) => ()
-    }
+    val entries = DataFiles.finish(spark, writer.epoch(epochId), messages.toSeq)
+    // an empty epoch mints no version (finish left no debris); a
+    // replayed epoch's bytes are redundant
+    if (entries.nonEmpty && Snapshot.appendEntries(spark, dir, entries, epochId, queryId).isEmpty)
+      abort(epochId, messages)
   }
 
   override def abort(epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    val s = spark
-    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(s"$dir/${relOf(epochId)}"), true)
-  }
+      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
+    if (writer != null) DataFiles.abort(spark, writer.epoch(epochId))
 }

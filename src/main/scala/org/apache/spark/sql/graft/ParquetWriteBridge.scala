@@ -8,16 +8,18 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-/** Parquet WRITING bridge for graft's DSv2 row-level operations — the
-  * mirror of [[ParquetReadBridge]]. A DSv2 `DataWriter[InternalRow]`
-  * must produce parquet bytes on executors; the engine's own writer
+/** Parquet WRITING bridge for graft's one snapshot data-file writer
+  * (`graft.sources.DataFiles`) — the mirror of [[ParquetReadBridge]].
+  * That writer's tasks write parquet bytes themselves, so they can
+  * collect each file's statistics, blooms and CHECK counts as the rows
+  * pass instead of reading the file back. The engine's own writer
   * stack (`ParquetFileFormat.prepareWrite` → `OutputWriterFactory` →
   * per-task `OutputWriter`) is exactly the code every
   * `InsertIntoHadoopFsRelation` task runs, but it lives behind
   * `private[sql]`-adjacent internals. Re-exporting the two pieces a
-  * writer task needs keeps the row-level write path byte-identical to
-  * a normal parquet write (compression codec, statistics, dictionary
-  * encoding — all the session's parquet conf applies).
+  * writer task needs keeps the bytes identical to a normal parquet
+  * write (compression codec, statistics, dictionary encoding — all the
+  * session's parquet conf applies).
   */
 object ParquetWriteBridge {
 
@@ -41,7 +43,7 @@ object ParquetWriteBridge {
   def taskContext(conf: SerializableConfiguration, partitionId: Int,
       taskId: Long): TaskAttemptContext = {
     val attempt = new TaskAttemptID(
-      new TaskID(new JobID("graft-rowlevel", 0), TaskType.MAP, partitionId),
+      new TaskID(new JobID("graft-write", 0), TaskType.MAP, partitionId),
       (taskId % Int.MaxValue).toInt)
     new TaskAttemptContextImpl(conf.value, attempt)
   }

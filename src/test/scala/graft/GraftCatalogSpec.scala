@@ -231,6 +231,27 @@ class GraftCatalogSpec extends SparkSpec {
       .collect()(0).getDouble(0) == 60.0)
   }
 
+  test("SQL UPDATE rewrites files under the table's stats and bloom spec") {
+    warehouse
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
+    // c17 sits past the first-16 stats default; only the spec names it
+    val cols = (1 to 17).map(i => s"c$i INT").mkString(", ")
+    spark.sql(s"CREATE TABLE graft.db.uspec (k BIGINT, $cols) " +
+      "TBLPROPERTIES ('graft.bloom_cols'='k', 'graft.stats_cols'='k,c17')")
+    val vals = (1 to 17).mkString(", ")
+    spark.sql(s"INSERT INTO graft.db.uspec VALUES (1, $vals), (2, $vals)")
+    spark.sql("UPDATE graft.db.uspec SET c1 = 100 WHERE k = 1")
+    val dir = s"$warehouse/db/uspec"
+    val v = Snapshot.versions(spark, dir).max
+    assert(Snapshot.history(spark, dir).collect().last.getString(1) == "update")
+    val added = graft.sources.EntriesForTest.added(spark, dir, v)
+    assert(added.nonEmpty)
+    added.foreach { case (path, stats, blooms) =>
+      assert(stats == Set("k", "c17"), s"$path stats keys $stats")
+      assert(blooms == Set("k"), s"$path bloom keys $blooms")
+    }
+  }
+
   test("SQL UPDATE with a subquery condition — the planner shape no predicate API expresses") {
     warehouse
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")

@@ -863,6 +863,72 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshot.read(spark, dir).where(col("score") === -8.0).count() == 1L)
   }
 
+  /** Spark jobs `body` runs, counted by a listener. */
+  private def jobsOf(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.BusDrainForTest(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.BusDrainForTest(spark.sparkContext); n.get }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def commitDirs(dir: String): Set[String] =
+    Option(new java.io.File(s"$dir/data").listFiles()).toSeq.flatten
+      .filter(_.isDirectory).map(_.getName).toSet
+
+  test("a commit or append of a no-shuffle frame runs ONE job, with or without a CHECK constraint") {
+    import spark.implicits._
+    val dir = tmp() + "/t"
+    def batch(from: Long) = (from until from + 20L).map(i => (i, s"n$i", i.toDouble))
+      .toDF("id", "name", "score")
+    assert(jobsOf(Snapshot.commit(spark, dir, batch(1L))) == 1)
+    assert(jobsOf(Snapshot.append(spark, dir, batch(100L))) == 1)
+    Snapshot.addConstraint(spark, dir, "score_pos", "score > 0")
+    assert(jobsOf(Snapshot.commit(spark, dir, batch(1L))) == 1)
+    assert(jobsOf(Snapshot.append(spark, dir, batch(100L))) == 1)
+    assert(Snapshot.read(spark, dir).count() == 40L)
+  }
+
+  test("a CHECK-violating append aborts: unchanged message, no version, no data dir left behind") {
+    import spark.implicits._
+    val dir = tmp() + "/t"
+    Snapshot.commit(spark, dir, base)
+    Snapshot.addConstraint(spark, dir, "score_pos", "score > 0")
+    val versions = Snapshot.versions(spark, dir)
+    val dirs = commitDirs(dir)
+    val bad = Seq((8L, "h", -8.0), (9L, "i", 9.0), (10L, "j", -1.0))
+      .toDF("id", "name", "score").repartition(2)
+    val ex = intercept[IllegalArgumentException] { Snapshot.append(spark, dir, bad) }
+    assert(ex.getMessage == s"CHECK constraint violated at $dir: " +
+      "'score_pos' (score > 0) by 2 row(s) — commit aborted, no version published")
+    assert(Snapshot.versions(spark, dir) == versions)
+    assert(commitDirs(dir) == dirs, "the aborted commit's data dir must be removed")
+  }
+
+  test("a stray part- file in the commit dir that no task named is pruned and never referenced") {
+    val dir = tmp() + "/t"
+    // a failed attempt's leftover, dropped into the commit dir mid-write
+    val stray = udf { (id: Long) =>
+      if (id == 50L) new java.io.File(s"$dir/data").listFiles().foreach { d =>
+        Files.write(new java.io.File(d, "part-00007-stray.snappy.parquet").toPath,
+          Array[Byte](1, 2, 3))
+      }
+      id
+    }
+    Snapshot.commit(spark, dir, spark.range(0, 100, 1, 1).select(stray(col("id")).as("id")))
+    val files = Snapshot.filesForTest(spark, dir, 1L).map(_._1)
+    assert(files.size == 1 && !files.exists(_.contains("stray")))
+    val onDisk = commitDirs(dir).toSeq.flatMap(d =>
+      new java.io.File(s"$dir/data/$d").listFiles().map(f => s"data/$d/${f.getName}"))
+      .filterNot(_.split('/').last.startsWith("."))
+    assert(onDisk == files, s"only task-named files may remain: $onDisk")
+    assert(Snapshot.read(spark, dir).count() == 100L)
+  }
+
   test("addConstraint validates EXISTING rows and refuses when they violate") {
     val dir = tmp() + "/t"
     Snapshot.commit(spark, dir, base)

@@ -1186,6 +1186,35 @@ class StreamingSpec extends SparkSpec {
       "a constraint-violating epoch must publish nothing")
   }
 
+  test("streaming WRITE after a column rename keeps the column's stats and bloom under its physical name") {
+    import graft.sources.Snapshot
+    val root = tmp()
+    val wh = s"$root/wh"
+    spark.conf.set("spark.sql.catalog.gren", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gren.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gren.db")
+    spark.sql("CREATE TABLE gren.db.t (id BIGINT, v BIGINT) " +
+      "TBLPROPERTIES ('graft.stats_cols'='v', 'graft.bloom_cols'='v')")
+    val dir = s"$wh/db/t"
+    Snapshot.renameColumn(spark, dir, "v", "w")
+    val src = s"$root/src"
+    import spark.implicits._
+    Seq((1L, 10L), (2L, 20L)).toDF("id", "w").write.parquet(s"$src/b1")
+    val q = spark.readStream.schema("id BIGINT, w BIGINT").parquet(s"$src/*")
+      .writeStream.option("checkpointLocation", s"$root/ck")
+      .toTable("gren.db.t")
+    q.processAllAvailable(); q.stop()
+    val v = Snapshot.versions(spark, dir).max
+    assert(Snapshot.history(spark, dir).collect().last.getString(1) == "append")
+    val added = graft.sources.EntriesForTest.added(spark, dir, v)
+    assert(added.nonEmpty)
+    added.foreach { case (path, stats, blooms) =>
+      assert(stats == Set("v") && blooms == Set("v"),
+        s"$path must carry physical-name stats/bloom: stats $stats, blooms $blooms")
+    }
+    assert(spark.table("gren.db.t").where(col("w") === 20L).count() == 1L)
+  }
+
   test("snapshot stream BY CATALOG IDENTIFIER: spark.readStream.table backfills, then resumes exactly-once on only-new appends") {
     val root = tmp()
     val wh = s"$root/wh"
