@@ -49,11 +49,12 @@ final class Service(spark: SparkSession, pipeline: Pipeline, stageDir: String) {
     */
   def json(tsCol: String = "last_updated"): Either[String, JsonPayload] =
     staged(spark.read.json(jsonDir)).map { df =>
+      // count and freshness in ONE aggregation pass
       val last =
-        if (df.columns.contains(tsCol))
-          df.agg(max(col(tsCol).cast("timestamp"))).head().getAs[java.sql.Timestamp](0)
-        else null
-      JsonPayload(df.count(), df, Option(last))
+        if (df.columns.contains(tsCol)) max(col(tsCol).cast("timestamp"))
+        else lit(null).cast("timestamp")
+      val r = df.agg(count(lit(1)), last).head()
+      JsonPayload(r.getLong(0), df, Option(r.getTimestamp(1)))
     }
 
   /** Staged CSV artifact; Left(error + suggestion) before refresh. */

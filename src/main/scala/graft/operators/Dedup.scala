@@ -169,11 +169,11 @@ object Dedup {
     * form: interpreted HOFs box every element access, and the extra
     * allocation cost outweighs the saved string concat.)
     */
-  private def gramArrays(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
+  private[graft] def gramArrays(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
     docs.select(col(id).as("id"), TextAnalysis.tokens(col(text)).as("toks"))
       .select(col("id"), shingles(col("toks"), n).as("grams"))
 
-  private def signaturesFromGrams(grams: DataFrame, numPerm: Int): DataFrame =
+  private[graft] def signaturesFromGrams(grams: DataFrame, numPerm: Int): DataFrame =
     sigsFromGramRows(grams.select(col("id"), explode(col("grams")).as("gram")), numPerm)
 
   /** Signature core over an already-exploded (id, gram) frame — shared
@@ -286,11 +286,13 @@ object Dedup {
     cand
       .join(grams.select(col("id").as("id_a"), col("grams").as("ga")), "id_a")
       .join(grams.select(col("id").as("id_b"), col("grams").as("gb")), "id_b")
-      .withColumn("j",
-        size(array_intersect(col("ga"), col("gb"))).cast(DoubleType) /
-          size(array_union(col("ga"), col("gb"))).cast(DoubleType))
+      .withColumn("j", gramJaccard(col("ga"), col("gb")))
       .filter(col("j") >= minJaccard)
       .select("id_a", "id_b", "j")
+
+  /** Exact Jaccard of two distinct-gram arrays. */
+  private[graft] def gramJaccard(ga: Column, gb: Column): Column =
+    size(array_intersect(ga, gb)).cast(DoubleType) / size(array_union(ga, gb)).cast(DoubleType)
 
   private def lshCandidatesFromSigs(sig: DataFrame, numPerm: Int,
       bands: Int, maxBucket: Int): DataFrame =
@@ -321,33 +323,6 @@ object Dedup {
     val cand = lshCandidatesFromSigs(signaturesFromGrams(grams, numPerm),
       numPerm, bands, maxBucket = 1000)
     verifyGramJaccard(cand, grams, minJaccard)
-  }
-
-  /** Verified near-dup pairs AND the batch's banded signatures from
-    * ONE tokenize→shingle→minhash pass — the dedup-on-arrival shape
-    * ([[graft.streaming.IncrementalDedup]]): the same signatures feed
-    * the intra-batch LSH *and* the persisted store, and composing
-    * [[minhashVerifiedPairs]] + [[bandedSignatures]] separately ran the
-    * whole gram/64-min-agg pipeline twice per wave (and a third time
-    * when the un-checkpointed pair frame re-evaluated under the
-    * admitted count). Both frames are eagerly materialized so the gram
-    * cache releases before return and no consumer re-runs the
-    * pipeline. Results are bit-identical to the composed form: same
-    * deterministic hash pipeline, `banded` filtered by the caller to
-    * survivor ids equals bandedSignatures(survivors).
-    */
-  private[graft] def minhashPairsAndBandedSigs(docs: DataFrame, id: String,
-      text: String, minJaccard: Double, numPerm: Int, bands: Int,
-      n: Int, maxBucket: Int = 1000): (DataFrame, DataFrame) = {
-    val grams = gramArrays(docs, id, text, n).persist()
-    try {
-      val banded = bandSigs(signaturesFromGrams(grams, numPerm), numPerm, bands)
-        .localCheckpoint(true)
-      val cand = candidatesFromBanded(banded, maxBucket)
-      val pairs = verifyGramJaccard(cand, grams, minJaccard)
-        .localCheckpoint(true)
-      (pairs, banded)
-    } finally { grams.unpersist(false); () }
   }
 
   /** MinHash-LSH dedup: one survivor (the min id) per connected

@@ -1495,16 +1495,18 @@ object Snapshot {
     val rel1 = s"$DataDir/${java.util.UUID.randomUUID()}"
     matched.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel1")
     val m1 = spark.read.parquet(s"$dir/$rel1")
-    val newCounts: Map[String, Long] = m1.groupBy(col("__dv_file")).count()
+    def dvCounts(dv: DataFrame): Map[String, Long] = dv.groupBy(col("__dv_file")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val newCounts = dvCounts(m1)
     if (newCounts.isEmpty) { f.delete(new Path(s"$dir/$rel1"), true); return None }
     val touchedNames = newCounts.keySet
     val needMerge = candidates.filter(e =>
       e.dv.isDefined && touchedNames.contains(baseName(e.path)))
 
     // -- step 3: merge prior dvs of re-deleted files so every entry
-    //    references ONE complete dv dataset --
-    val (finalRel, finalDv) = if (needMerge.isEmpty) (rel1, m1) else {
+    //    references ONE complete dv dataset (without prior dvs, m1 is
+    //    that dataset and its counts are already known) --
+    val (finalRel, totals) = if (needMerge.isEmpty) (rel1, newCounts) else {
       import spark.implicits._
       val names = needMerge.map(e => baseName(e.path)).toDF("__dv_file")
       val old = spark.read.parquet(needMerge.flatMap(_.dv.map(d => absPath(dir, d.path))).distinct: _*)
@@ -1512,10 +1514,8 @@ object Snapshot {
       val rel2 = s"$DataDir/${java.util.UUID.randomUUID()}"
       m1.unionByName(old).distinct().write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel2")
       f.delete(new Path(s"$dir/$rel1"), true)
-      (rel2, spark.read.parquet(s"$dir/$rel2"))
+      (rel2, dvCounts(spark.read.parquet(s"$dir/$rel2")))
     }
-    val totals: Map[String, Long] = finalDv.groupBy(col("__dv_file")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
     val files = prev.files.flatMap { e =>
       val name = baseName(e.path)

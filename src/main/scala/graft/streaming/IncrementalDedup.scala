@@ -5,29 +5,44 @@ import graft.sources.Snapshot
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.DoubleType
 
 /** INCREMENTAL near-dup dedup over the snapshot stream — "dedup on
   * arrival", the shape a 100 TB ingest actually runs: instead of
   * re-deduping the whole corpus per batch (O(corpus) every arrival),
   * the pipeline maintains a VERSIONED SIGNATURE STORE (a snapshot
   * table of banded MinHash signatures, 16 rows of (id, band, sig) per
-  * admitted document) and each arriving batch LSH-PROBES the store:
+  * admitted document) and each arriving batch LSH-PROBES the store in
+  * ONE verified pass:
   *
-  *   1. intra-batch: new-vs-new near-dups collapse first (verified
-  *      MinHash pairs, first-occurrence-by-id wins);
-  *   2. cross-batch: the batch's band signatures probe the store —
-  *      the store scan is pre-filtered with the batch's sig values
-  *      (64-bit uniform keys), so a store carrying per-file stats or
-  *      blooms on `sig` prunes to the candidate files instead of
-  *      scanning history (run `optimize(clusterBy = sig)` as the
-  *      maintenance loop to keep files sig-disjoint);
-  *   3. candidates verify with EXACT n-gram Jaccard against only the
-  *      matched historical docs' text (pulled from the corpus table
-  *      by id — bounded by candidates, never O(corpus));
-  *   4. survivors append to the corpus table AND their signatures to
-  *      the store, both under the SAME per-writer exactly-once cursor
-  *      (batchId, app).
+  *   1. the batch's shingle grams and banded signatures are built once
+  *      (grams cached, signatures checkpointed) and feed everything
+  *      below;
+  *   2. two kinds of candidate pairs, each joined to the grams of
+  *      the doc it matched BEFORE they are unioned, so batch ids and
+  *      corpus ids never share a column: intra-batch pairs a < b
+  *      sharing a band bucket (b is the would-be loser, a's grams come
+  *      from the batch) and store pairs (old, new) sharing a
+  *      (band, sig) with the store. The store scan is pre-filtered
+  *      with the batch's sig values (64-bit uniform keys), so a store
+  *      carrying per-file stats or blooms on `sig` prunes to the
+  *      candidate files (run `optimize(clusterBy = sig)` as the
+  *      maintenance loop to keep files sig-disjoint). The old docs'
+  *      text comes from the corpus table by a broadcast join on the
+  *      probe's pairs. No `id` predicate reaches the corpus file
+  *      index, so that read still scans EVERY corpus file: the join is
+  *      candidate-bounded, the scan is O(corpus);
+  *   3. both kinds verify with EXACT n-gram Jaccard against the batch
+  *      doc's grams in one join;
+  *   4. admitted = batch − (intra losers ∪ store-rejected), cached
+  *      once: it appends to the corpus table, and the batch's
+  *      signatures semi-joined with it append to the store, both under
+  *      the SAME per-writer exactly-once cursor (batchId, app).
+  *
+  * Checking every batch doc against the store (not only the intra-batch
+  * survivors) admits the same rows: a doc's store verdict does not
+  * depend on the other docs of its batch, and an intra loser is dropped
+  * either way. Intra losers are not closed transitively: with A~B, B~C
+  * and A≁C both B and C drop.
   *
   * Crash consistency across the two appends: the corpus commit is the
   * decision record. A replay where BOTH tables cover the batch is a
@@ -61,28 +76,22 @@ object IncrementalDedup {
     }
     if (batch.isEmpty) return 0L
 
-    // ── 1. intra-batch collapse: first occurrence (min id) wins ──
-    // ONE tokenize→shingle→minhash pass yields both the verified pairs
-    // and the batch's banded signatures (composing minhashVerifiedPairs
-    // + bandedSignatures re-ran the signature pipeline per consumer)
-    val (pairs, banded) = Dedup.minhashPairsAndBandedSigs(batch, id, text,
-      minJaccard, numPerm, bands, n)
-    // id_a < id_b by construction: every id that loses to an earlier id
-    val intraLosers = pairs.select(col("id_b").as("lid")).distinct()
-    val survivors = batch.join(intraLosers,
-      batch(id) === intraLosers("lid"), "left_anti")
-
-    // ── 2. cross-batch probe of the signature store ──
-    // survivors' signatures = the batch's banded frame minus the
-    // intra-batch losers (identical rows to re-signing the survivors)
-    val newSigs = banded.join(intraLosers,
-        banded("id") === intraLosers("lid"), "left_anti")
-      .persist()
+    // ── 1. one tokenize→shingle→minhash pass over the batch ──
+    val grams = Dedup.gramArrays(batch, id, text, n).persist()
     try {
-      val rejected: DataFrame =
-        if (Snapshot.latestVersion(spark, sigDir).isEmpty) {
-          spark.range(0).select(col("id").as("rid"))
-        } else {
+      val banded = Dedup.bandSigs(Dedup.signaturesFromGrams(grams, numPerm),
+        numPerm, bands).localCheckpoint(true)
+
+      // ── 2. candidate pairs (id_b = the batch doc that drops if the
+      //    pair verifies), each joined to the grams of the doc it
+      //    matched BEFORE the union, so batch and corpus ids never
+      //    share a column ──
+      val intra = Dedup.candidatesFromBanded(banded, maxBucket = 1000)
+        .join(grams.select(col("id").as("id_a"), col("grams").as("ga")), "id_a")
+        .select(col("id_b"), col("ga"))
+      val matched =
+        if (Snapshot.latestVersion(spark, sigDir).isEmpty) intra
+        else {
           // prune the store scan with the batch's sig values — uniform
           // 64-bit keys, so per-file stats/blooms on `sig` cut the scan
           // to candidate files. The In-list prune is O(values × files)
@@ -90,39 +99,36 @@ object IncrementalDedup {
           // full join — for a BIG batch the store-scan cost amortizes
           // over the batch anyway; the prune exists for the common
           // small-arrival case
-          val sigValues = newSigs.select("sig").distinct()
+          val sigValues = banded.select("sig").distinct()
             .limit(sigProbeCap + 1).collect().map(_.getLong(0))
           val store0 = Snapshot.read(spark, sigDir)
           val store =
             if (sigValues.length <= sigProbeCap)
               store0.filter(col("sig").isin(sigValues.toIndexedSeq: _*))
             else store0
-          val cands = store
-            .select(col("id").as("old_id"), col("band"), col("sig"))
-            .join(newSigs.select(col("id").as("new_id"), col("band"), col("sig")),
+          val probe = store.select(col("id").as("old_id"), col("band"), col("sig"))
+            .join(banded.select(col("id").as("id_b"), col("band"), col("sig")),
               Seq("band", "sig"))
-            .select("new_id", "old_id").distinct()
-          // exact verification against ONLY the matched docs' text
+            .select(col("old_id"), col("id_b")).distinct()
+          // the probe is candidate-bounded, the corpus is not: broadcast
+          // the probe rather than shuffle the corpus
           val oldDocs = Snapshot.read(spark, corpusDir)
-            .select(col(id).as("old_id"), col(text).as("old_text"))
-            .join(cands.select("old_id").distinct(), Seq("old_id"), "left_semi")
-          val newDocs = survivors.select(col(id).as("new_id"), col(text).as("new_text"))
-            .join(cands.select("new_id").distinct(), Seq("new_id"), "left_semi")
-          val toksOld = graft.operators.TextAnalysis.tokens(col("old_text"))
-          val toksNew = graft.operators.TextAnalysis.tokens(col("new_text"))
-          cands.join(oldDocs, Seq("old_id")).join(newDocs, Seq("new_id"))
-            .withColumn("ga", Dedup.shingles(toksNew, n))
-            .withColumn("gb", Dedup.shingles(toksOld, n))
-            .withColumn("j",
-              size(array_intersect(col("ga"), col("gb"))).cast(DoubleType) /
-                size(array_union(col("ga"), col("gb"))).cast(DoubleType))
-            .filter(col("j") >= minJaccard)
-            .select(col("new_id").as("rid")).distinct()
+            .select(col(id).as("old_id"), col(text))
+            .join(broadcast(probe), "old_id")
+          intra.unionByName(Dedup.gramArrays(oldDocs, "id_b", text, n)
+            .select(col("id").as("id_b"), col("grams").as("ga")))
         }
-      val admitted = survivors.join(rejected,
-        survivors(id) === rejected("rid"), "left_anti").persist()
+      // ── 3. one exact verification pass over both candidate kinds ──
+      val drops = matched
+        .join(grams.select(col("id").as("id_b"), col("grams").as("gb")), "id_b")
+        .filter(Dedup.gramJaccard(col("ga"), col("gb")) >= minJaccard)
+        .select(col("id_b").as("did")).distinct()
+
+      // ── 4. publish: corpus first (the decision record), then sigs ──
+      // drops ⊆ batch ids: broadcast them rather than shuffle the batch
+      val admitted = batch.join(broadcast(drops), batch(id) === drops("did"), "left_anti")
+        .persist()
       try {
-        // ── 3. publish: corpus first (the decision record), then sigs ──
         // The write path counts rows for its manifest metrics, so the
         // admitted census comes from commitCounted/appendCounted — a
         // separate count() action per wave was pure overhead. The
@@ -136,9 +142,8 @@ object IncrementalDedup {
               spec = Some(Snapshot.TableSpec(statsCols = Seq(id))))._2
           else
             Snapshot.appendCounted(spark, corpusDir, admitted, Some(batchId), Some(app))._2
-        val admittedSigs = newSigs.join(
-          admitted.select(col(id).as("aid")),
-          newSigs("id") === col("aid"), "left_semi")
+        val admittedSigs = banded.join(admitted.select(col(id).as("aid")),
+          banded("id") === col("aid"), "left_semi")
         if (Snapshot.latestVersion(spark, sigDir).isEmpty)
           Snapshot.commit(spark, sigDir, admittedSigs, Some(batchId), Some(app),
             spec = Some(Snapshot.TableSpec(statsCols = Seq("sig"),
@@ -147,7 +152,7 @@ object IncrementalDedup {
           Snapshot.append(spark, sigDir, admittedSigs, Some(batchId), Some(app))
         nAdmitted
       } finally { admitted.unpersist(); () }
-    } finally { newSigs.unpersist(); () }
+    } finally { grams.unpersist(); () }
   }
 
   /** Recovery half of the exactly-once contract: the corpus append for

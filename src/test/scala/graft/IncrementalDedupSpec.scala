@@ -1,8 +1,12 @@
 package graft
 
+import graft.operators.Dedup
 import graft.sources.Snapshot
 import graft.streaming.IncrementalDedup
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import scala.util.Random
 
 /** Dedup on arrival: the incremental MinHash-LSH pipeline that probes a
   * versioned signature store per batch instead of re-deduping the
@@ -179,5 +183,166 @@ class IncrementalDedupSpec extends SparkSpec {
     run()
     assert(Snapshot.latestVersion(spark, corpus).get == cv)
     assert(Snapshot.latestVersion(spark, sigs).get == sv)
+  }
+
+  /** The probe as it ran before the single verified pass: intra-batch
+    * verified pairs first (first occurrence by id wins), then the
+    * SURVIVORS' signatures probe the store, then the store candidates
+    * verify in a second join. Kept as the differential reference for a
+    * fresh wave (no replay/recovery paths), writer identity "default".
+    */
+  private def referenceApply(batch: DataFrame, batchId: Long, corpusDir: String,
+      sigDir: String, sigProbeCap: Int): Long = {
+    val (id, text, minJaccard, numPerm, bands, n) = ("doc_id", "text", 0.8, 64, 16, 3)
+    val app = Some("default")
+    val grams = Dedup.gramArrays(batch, id, text, n).persist()
+    val (pairs, banded) =
+      try {
+        val banded = Dedup.bandSigs(Dedup.signaturesFromGrams(grams, numPerm), numPerm, bands)
+          .localCheckpoint(true)
+        val pairs = Dedup.verifyGramJaccard(Dedup.candidatesFromBanded(banded, 1000),
+          grams, minJaccard).localCheckpoint(true)
+        (pairs, banded)
+      } finally grams.unpersist(false)
+    val intraLosers = pairs.select(col("id_b").as("lid")).distinct()
+    val survivors = batch.join(intraLosers, batch(id) === intraLosers("lid"), "left_anti")
+    val newSigs = banded.join(intraLosers, banded("id") === intraLosers("lid"), "left_anti")
+    val rejected =
+      if (Snapshot.latestVersion(spark, sigDir).isEmpty) spark.range(0).select(col("id").as("rid"))
+      else {
+        val sigValues = newSigs.select("sig").distinct()
+          .limit(sigProbeCap + 1).collect().map(_.getLong(0))
+        val store0 = Snapshot.read(spark, sigDir)
+        val store =
+          if (sigValues.length <= sigProbeCap) store0.filter(col("sig").isin(sigValues.toIndexedSeq: _*))
+          else store0
+        val cands = store.select(col("id").as("old_id"), col("band"), col("sig"))
+          .join(newSigs.select(col("id").as("new_id"), col("band"), col("sig")), Seq("band", "sig"))
+          .select("new_id", "old_id").distinct()
+        val oldDocs = Snapshot.read(spark, corpusDir)
+          .select(col(id).as("old_id"), col(text).as("old_text"))
+          .join(cands.select("old_id").distinct(), Seq("old_id"), "left_semi")
+        val newDocs = survivors.select(col(id).as("new_id"), col(text).as("new_text"))
+          .join(cands.select("new_id").distinct(), Seq("new_id"), "left_semi")
+        cands.join(oldDocs, Seq("old_id")).join(newDocs, Seq("new_id"))
+          .withColumn("ga", Dedup.shingles(graft.operators.TextAnalysis.tokens(col("new_text")), n))
+          .withColumn("gb", Dedup.shingles(graft.operators.TextAnalysis.tokens(col("old_text")), n))
+          .withColumn("j", size(array_intersect(col("ga"), col("gb"))).cast("double") /
+            size(array_union(col("ga"), col("gb"))).cast("double"))
+          .filter(col("j") >= minJaccard)
+          .select(col("new_id").as("rid")).distinct()
+      }
+    val admitted = survivors.join(rejected, survivors(id) === rejected("rid"), "left_anti")
+    val nAdmitted =
+      if (Snapshot.latestVersion(spark, corpusDir).isEmpty)
+        Snapshot.commitCounted(spark, corpusDir, admitted, Some(batchId), app,
+          spec = Some(Snapshot.TableSpec(statsCols = Seq(id))))._2
+      else Snapshot.appendCounted(spark, corpusDir, admitted, Some(batchId), app)._2
+    val admittedSigs = newSigs.join(admitted.select(col(id).as("aid")),
+      newSigs("id") === col("aid"), "left_semi")
+    if (Snapshot.latestVersion(spark, sigDir).isEmpty)
+      Snapshot.commit(spark, sigDir, admittedSigs, Some(batchId), app,
+        spec = Some(Snapshot.TableSpec(statsCols = Seq("sig"), bloomCols = Seq("sig"))))
+    else Snapshot.append(spark, sigDir, admittedSigs, Some(batchId), app)
+    nAdmitted
+  }
+
+  /** Seeded waves over a small vocabulary: fresh docs, exact and
+    * one-word near copies of earlier docs (earlier waves AND earlier in
+    * the same wave), one intra-batch chain A~B, B~C with A≁C, and one
+    * doc shorter than the shingle width.
+    */
+  private def seededWaves(seed: Long, waves: Int, size: Int): Seq[Seq[(Long, String)]] = {
+    val rnd = new Random(seed)
+    val vocab = Array.tabulate(300)(i => s"v$i")
+    def fresh(): Array[String] = Array.fill(30 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.length)))
+    def swap(ws: Array[String], at: Int): Array[String] = ws.updated(at, s"x${rnd.nextInt(1000000)}")
+    val seen = scala.collection.mutable.ArrayBuffer[Array[String]]()
+    var next = 0L
+    (0 until waves).map { w =>
+      val docs = scala.collection.mutable.ArrayBuffer[Array[String]]()
+      // the chain: B changes one interior word of A (3 of 28 shingles,
+      // J ≈ 0.81), C changes another (J(B, C) ≈ 0.81, J(A, C) ≈ 0.65)
+      val a = fresh().take(30)
+      val b = swap(a, 15)
+      docs ++= Seq(a, b, swap(b, 5), Array("tiny", "doc"))
+      while (docs.size < size) {
+        val pool = seen ++ docs
+        val u = rnd.nextDouble()
+        docs += (if (pool.nonEmpty && u < 0.2) pool(rnd.nextInt(pool.size))
+          else if (pool.nonEmpty && u < 0.45) {
+            val src = pool(rnd.nextInt(pool.size)); swap(src, rnd.nextInt(src.length))
+          } else fresh())
+      }
+      seen ++= docs
+      rnd.shuffle(docs.toSeq).map { ws => next += 1; (next, ws.mkString(" ")) }
+    }
+  }
+
+  private def idsOf(dir: String): Set[Long] =
+    if (Snapshot.latestVersion(spark, dir).isEmpty) Set.empty else corpusIds(dir)
+
+  private def corpusRows(dir: String): Seq[(Long, String)] =
+    Snapshot.read(spark, dir).select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+
+  private def storeRows(dir: String): Seq[(Long, Int, Long)] =
+    Snapshot.read(spark, dir).select("id", "band", "sig").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+
+  test("the single verified probe admits exactly what intra-batch-then-probe admitted, wave by wave") {
+    for ((cap, seed) <- Seq((8192, 11L), (2, 12L))) { // cap 2 forces the full-join fallback
+      val root = tmp()
+      val (refCorpus, refSigs) = (s"$root/ref/corpus", s"$root/ref/sigs")
+      val (corpus, sigs) = (s"$root/new/corpus", s"$root/new/sigs")
+      var storeRejects = 0
+      seededWaves(seed, waves = 4, size = 24).zipWithIndex.foreach { case (wave, w) =>
+        val (refBefore, before) = (idsOf(refCorpus), idsOf(corpus))
+        val stored = if (w == 0) Set.empty[String] else corpusRows(corpus).map(_._2).toSet - "tiny doc"
+        val nRef = referenceApply(docs(wave: _*), w.toLong, refCorpus, refSigs, cap)
+        val nNew = IncrementalDedup.applyBatch(docs(wave: _*), w.toLong, corpus, sigs,
+          "doc_id", "text", sigProbeCap = cap)
+        val admitted = idsOf(corpus) -- before
+        assert(admitted == idsOf(refCorpus) -- refBefore, s"cap $cap wave $w")
+        assert(nNew == nRef && nNew == admitted.size.toLong)
+        // a doc shorter than the shingle width has no signature: it
+        // always admits and adds no store rows
+        assert(wave.collect { case (i, "tiny doc") => i }.toSet.subsetOf(admitted))
+        // exact copies of stored docs reject against the store
+        val copies = wave.collect { case (i, t) if stored(t) => i }.toSet
+        assert((copies & admitted).isEmpty)
+        storeRejects += copies.size
+        assert(admitted.size < wave.size)
+      }
+      // the waves exercise both halves: intra-batch losers in every
+      // wave (the first has no store), store rejects after the first
+      assert(storeRejects > 0)
+      assert(corpusRows(corpus) == corpusRows(refCorpus))
+      assert(storeRows(sigs) == storeRows(refSigs))
+    }
+  }
+
+  test("intra-batch chain A~B, B~C with A≁C: B and C both drop, A admits") {
+    val words = (0 until 30).map(i => s"c$i").toArray
+    val b = words.updated(15, "b15")
+    val c = b.updated(5, "c5")
+    val root = tmp()
+    val n = IncrementalDedup.applyBatch(
+      docs(1L -> words.mkString(" "), 2L -> b.mkString(" "), 3L -> c.mkString(" ")),
+      0L, s"$root/corpus", s"$root/sigs", "doc_id", "text")
+    assert(n == 1L)
+    assert(corpusIds(s"$root/corpus") == Set(1L))
+  }
+
+  test("a probing wave runs at most 21 Spark jobs") {
+    val root = tmp()
+    val corpus = s"$root/corpus"; val sigs = s"$root/sigs"
+    val waves = seededWaves(21L, waves = 2, size = 40)
+    IncrementalDedup.applyBatch(docs(waves(0): _*), 0L, corpus, sigs, "doc_id", "text")
+    // before the single verified probe: 28 jobs on this wave (32 on the
+    // benchmark's 100-doc ingest wave)
+    val jobs = jobsOf(IncrementalDedup.applyBatch(docs(waves(1): _*), 1L, corpus, sigs,
+      "doc_id", "text"))
+    assert(jobs <= 21, s"$jobs jobs")
   }
 }

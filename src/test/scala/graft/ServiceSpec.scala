@@ -41,6 +41,19 @@ class ServiceSpec extends SparkSpec {
     assert(csv.count() == 2)
   }
 
+  test("json's one-pass count and freshness equal the separate count() and max() actions") {
+    val svc = buildService(Files.createTempDirectory("graft-svc").toString)
+    assert(svc.refresh().isRight)
+    val payload = svc.json().toOption.get
+    val df = spark.read.json(svc.jsonDir)
+    assert(payload.count == df.count())
+    assert(payload.lastUpdated ==
+      Option(df.agg(max(col("last_updated").cast("timestamp"))).head().getTimestamp(0)))
+    // no timestamp column: the count still comes back, freshness is absent
+    val noTs = svc.json(tsCol = "no_such_column").toOption.get
+    assert(noTs.count == df.count() && noTs.lastUpdated.isEmpty)
+  }
+
   test("refresh surfaces failure instead of throwing (reference 500 contract)") {
     val p = Pipeline.builder(spark).source("down")(_ => sys.error("all sources down"))
     val svc = new Service(spark, p, Files.createTempDirectory("graft-svc").toString)

@@ -711,6 +711,18 @@ class SnapshotSpec extends SparkSpec {
       Set((2L, "b", 2.0), (3L, "c", 3.0), (4L, "d", 4.0)))
   }
 
+  test("deleteWhere job counts: without a prior dv the new dv's counts are reused, the merge path recounts") {
+    val dir = tmp() + "/t"
+    Snapshot.commit(spark, dir, base.repartition(1))
+    // before the counts were reused: 6 jobs without a prior dv, 12 with one
+    val fresh = jobsOf(Snapshot.deleteWhere(spark, dir, col("id") === 1L))
+    assert(fresh <= 4, s"$fresh jobs")
+    val merged = jobsOf(Snapshot.deleteWhere(spark, dir, col("id") === 3L))
+    assert(merged <= 12, s"$merged jobs")
+    assert(entries(dir, 3L).map(_._3).sum == 2L)
+    assert(rows(Snapshot.read(spark, dir)) == Set((2L, "b", 2.0), (4L, "d", 4.0)))
+  }
+
   test("upsert on a dv'd file does not resurrect deleted rows and materializes the dv away") {
     import spark.implicits._
     val dir = tmp() + "/t"
@@ -861,19 +873,6 @@ class SnapshotSpec extends SparkSpec {
     Snapshot.dropConstraint(spark, dir, "score_pos")                   // v5
     Snapshot.append(spark, dir, bad)                                   // v6 now fine
     assert(Snapshot.read(spark, dir).where(col("score") === -8.0).count() == 1L)
-  }
-
-  /** Spark jobs `body` runs, counted by a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.BusDrainForTest(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.BusDrainForTest(spark.sparkContext); n.get }
-    finally spark.sparkContext.removeSparkListener(l)
   }
 
   private def commitDirs(dir: String): Set[String] =

@@ -10,6 +10,19 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` runs, counted by a listener. */
+  def jobsOf(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.BusDrainForTest(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.BusDrainForTest(spark.sparkContext); n.get }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
